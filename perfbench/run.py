@@ -79,28 +79,17 @@ def build():
         f.write(digest)
 
 
-def untraced_history(workload):
-    """The workload's throughput in earlier untraced runs of this checkout."""
-    name = E2E[workload]["throughput_per_s"]
-    vals = []
-    for f in sorted(os.listdir(ARTIFACTS)):
-        if f.startswith(f"{workload}-") and f.endswith("-trace0-result.json"):
-            with open(os.path.join(ARTIFACTS, f)) as fh:
-                vals.append(json.load(fh)["metrics"][name]["value"])
-    return vals
-
-
-def java_cmd(args, work, out, baseline):
+def java_cmd(args, work, out):
     spark_home = os.environ.get("SPARK_HOME")
     if not spark_home:
         raise SystemExit("SPARK_HOME must name a Spark 4 distribution")
     cp = CLASSES + os.pathsep + os.path.join(spark_home, "jars", "*")
     opens = [x for p in JDK_OPENS for x in ("--add-opens", f"{p}=ALL-UNNAMED")]
-    return (["java", "-Xmx2g", "-XX:+UseG1GC", f"-Djava.io.tmpdir={work}/tmp",
+    return (["java", "-Xmx2g", "-XX:+UseParallelGC", f"-Djava.io.tmpdir={work}/tmp",
              "-Duser.timezone=UTC", "-Dspark.ui.enabled=false"] + opens +
             ["-cp", cp, "perfbench.Main", "--workload", args.workload, "--seed", str(args.seed),
              "--seconds", str(args.seconds), "--trace", str(args.trace),
-             "--baseline", "1" if baseline else "0", "--work", work, "--out", out])
+             "--work", work, "--out", out])
 
 
 def run_java(cmd, deadline):
@@ -159,12 +148,8 @@ def main():
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(os.path.join(work, "tmp"))
     out = os.path.join(work, "result.json")
-    # the traced run's overhead is taken against untraced runs: earlier ones
-    # in this checkout, or else an untraced pass made first in this run
-    history = untraced_history(args.workload) if args.trace else []
     try:
-        code = run_java(java_cmd(args, work, out, args.trace and not history),
-                        started + RUN_LIMIT_S)
+        code = run_java(java_cmd(args, work, out), started + RUN_LIMIT_S)
         if code != 0 or not os.path.exists(out):
             raise SystemExit(f"workload failed (exit {code})")
         res = json.load(open(out))
@@ -178,14 +163,6 @@ def main():
         if os.path.exists(keep):
             shutil.copy(keep, os.path.join(ARTIFACTS, f"{tag}-result.json"))
         shutil.rmtree(work, ignore_errors=True)
-
-    if args.trace:
-        name = E2E[args.workload]["throughput_per_s"]
-        base = res["metrics"].get(f"baseline_{name}", {}).get("value")
-        if base is None:
-            base = sorted(history)[len(history) // 2]
-        res["layers"]["trace.overhead_pct"] = {
-            "value": (base / res["metrics"][name]["value"] - 1.0) * 100.0, "unit": "%"}
 
     checks = {**res["checks"], **oracle}
     attempted = res["attempted"] + len(oracle)

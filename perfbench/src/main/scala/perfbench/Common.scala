@@ -76,6 +76,15 @@ object Host {
   def psiCpuSomeUs(): Long = read("/proc/pressure/cpu").flatMap(_.linesIterator
     .find(_.startsWith("some")).map(_.split("total=")(1).trim.toLong)).getOrElse(-1L)
 
+  /** (steal, total) jiffies over all CPUs from /proc/stat: time the
+    * hypervisor ran something else while this VM had work, which PSI inside
+    * the VM does not count; (-1, -1) when unreadable. */
+  def cpuSteal(): (Long, Long) = read("/proc/stat").flatMap(_.linesIterator
+    .find(_.startsWith("cpu ")).map { l =>
+      val f = l.trim.split("\\s+").drop(1).map(_.toLong)
+      (if (f.length > 7) f(7) else 0L, f.take(8).sum)
+    }).getOrElse((-1L, -1L))
+
   def loadavg1(): Double =
     read("/proc/loadavg").map(_.trim.split("\\s+")(0).toDouble).getOrElse(-1.0)
 
@@ -83,19 +92,51 @@ object Host {
   def peakRssMb(): Double = read("/proc/self/status").flatMap(_.linesIterator
     .find(_.startsWith("VmHWM:")).map(_.split("\\s+")(1).toDouble / 1024.0)).getOrElse(-1.0)
 
-  /** A window over which CPU stall share is measured. */
+  @volatile private var probeSink = 0L
+  private lazy val probeTable = Array.tabulate(1 << 18)(i => (i * 40503 + 17) & ((1 << 18) - 1))
+
+  /** Wall time of a fixed single-threaded loop (dependent loads from a 1 MB
+    * table plus integer arithmetic), median of 7: the host's per-core
+    * speed. A busy neighbour on the same physical cores slows this VM's
+    * CPUs without moving PSI or steal; this figure moves with it. */
+  def cpuProbeMs(): Double = Stats.median((0 until 7).map { _ =>
+    val t0 = System.nanoTime()
+    var j, i = 0
+    var x = 0L
+    while (i < 4000000) {
+      j = probeTable(j ^ (x & 0xff).toInt)
+      x = x * 6364136223846793005L + j
+      i += 1
+    }
+    probeSink = x
+    (System.nanoTime() - t0) / 1e6
+  })
+
+  /** A window over which CPU stall share is measured; the CPU probe runs
+    * just before it opens and just after it closes, outside the timed
+    * region. */
   final class Window {
+    private val probe0 = cpuProbeMs()
     private val psi0 = psiCpuSomeUs()
+    private val steal0 = cpuSteal()
     private val t0 = System.nanoTime()
     def stallPct: Double = {
       val psi1 = psiCpuSomeUs()
       val wallUs = (System.nanoTime() - t0) / 1e3
       if (psi0 < 0 || psi1 < 0 || wallUs <= 0) -1.0 else (psi1 - psi0) / wallUs * 100.0
     }
+    def stealPct: Double = {
+      val (s1, t1) = cpuSteal()
+      if (steal0._2 < 0 || t1 <= steal0._2) -1.0 else (s1 - steal0._1) * 100.0 / (t1 - steal0._2)
+    }
+    /** Mean of the probe before and after the window. */
+    def probeMs: Double = (probe0 + cpuProbeMs()) / 2
   }
 
   def record(res: Result, w: Window): Unit = {
     res.hostMetric("host.cpu_stall_pct", "%", w.stallPct)
+    res.hostMetric("host.steal_pct", "%", w.stealPct)
+    res.hostMetric("host.cpu_probe_ms", "ms", w.probeMs)
     res.hostMetric("host.loadavg", "count", loadavg1())
   }
 }

@@ -154,10 +154,13 @@ object IngestPath {
   val Params = Progress.Params(excludedSemester = EventsAdapter.ExcludedSemester)
 
   /** The advisor's per-student request (`app.py`): transcript plus the
-    * one-student progress report, both collected to the driver. */
-  def lookup(spark: SparkSession, store: DataFrame, masv: String): (Array[Row], Array[Row]) =
-    (Progress.transcript(store, masv).collect(),
-      Progress.report(spark, store.filter(col("F_MASV") === masv), Params).collect())
+    * one-student progress report. The caller collects both. */
+  def lookup(spark: SparkSession, store: DataFrame, masv: String): (DataFrame, DataFrame) =
+    (Progress.transcript(store, masv),
+      Progress.report(spark, store.filter(col("F_MASV") === masv), Params))
+
+  def collect(req: (DataFrame, DataFrame)): (Array[Row], Array[Row]) =
+    (req._1.collect(), req._2.collect())
 
   /** The cohort dashboard: the whole-store report. */
   def cohort(spark: SparkSession, store: DataFrame): Array[Row] =
@@ -165,7 +168,11 @@ object IngestPath {
 
   def masv(u: Int): String = s"B2${u % 5}-$u"
 
-  /** A seeded, skewed (Zipf s=1) request sequence over the students. */
+  /** A seeded, skewed request sequence over the students: Zipf with s = 1
+    * over a seeded permutation. The exponent is an assumption; nothing in
+    * the paper or the repository gives the advisors' access pattern. Every
+    * request scans the whole store, so the skew only sets how many rows a
+    * request returns. */
   final class Students(seed: Long) {
     private val rnd = new java.util.SplittableRandom(seed * 17 + 3)
     private val perm = {

@@ -7,21 +7,20 @@ import org.apache.spark.sql.SparkSession
 /** Benchmark entry point. `perfbench/run.py` builds this package and calls
   *
   *   java ... perfbench.Main --workload <name> --seed <n> --seconds <s>
-  *        --trace <0|1> [--baseline 1] --work <dir> --out <result.json>
+  *        --trace <0|1> --work <dir> --out <result.json>
   *
   * The workload writes one result JSON (metrics by name, op counts, output
   * check verdicts, host context) to `--out`; run.py turns it into the
   * benchmark's stdout line. Everything the run creates lives under `--work`.
   */
 final case class Args(workload: String, seed: Long, seconds: Int, trace: Boolean,
-                      baseline: Boolean, work: String, out: String)
+                      work: String, out: String)
 
 object Main {
   def main(argv: Array[String]): Unit = {
     val kv = argv.grouped(2).collect { case Array(k, v) => k.stripPrefix("--") -> v }.toMap
     val a = Args(kv("workload"), kv("seed").toLong, kv("seconds").toInt,
-      kv.getOrElse("trace", "0") == "1", kv.getOrElse("baseline", "0") == "1",
-      kv("work"), kv("out"))
+      kv.getOrElse("trace", "0") == "1", kv("work"), kv("out"))
     Files.createDirectories(Paths.get(a.work))
     val cores = Runtime.getRuntime.availableProcessors()
     val spark = Session.build(cores, a.work)
@@ -55,8 +54,8 @@ object Session {
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.local.dir", s"$work/spark-local")
       .config("spark.sql.warehouse.dir", s"$work/warehouse")
-      // keep every micro-batch's progress on the query object: the trickle
-      // bookkeeping reads it after the run instead of from the listener bus
+      // keep every micro-batch's progress on the query object: the store
+      // build reads it after the drain instead of from the listener bus
       .config("spark.sql.streaming.numRecentProgressUpdates", "100000")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")

@@ -125,17 +125,20 @@ object Trace {
     case None => body
   }
 
-  /** Driver and executor counters over [fromMs, toMs] into the result. */
-  def recordSpark(res: Result, t: Trace, fromMs: Long, toMs: Long): Unit = {
+  /** Driver and executor counters over [fromMs, toMs] into the result,
+    * each per operation (`ops`: requests or passes run in the window), so
+    * that a faster program, which fits more operations into the window,
+    * does not read as doing more work. */
+  def recordSpark(res: Result, t: Trace, fromMs: Long, toMs: Long, ops: Int): Unit = {
     t.drain()
     val (n, gap) = t.jobStats(fromMs, toMs)
-    res.layer("driver.jobs", "count", n)
-    res.layer("driver.job_gap_ms", "ms", gap)
-    res.layer("driver.codegen_ms", "ms", t.codegenMs)
-    res.layer("exec.task_ms", "ms", t.taskMs.sum().toDouble)
-    res.layer("exec.cpu_ms", "ms", t.cpuMs.sum().toDouble)
-    res.layer("exec.gc_ms", "ms", t.gcMs.sum().toDouble)
-    res.layer("exec.shuffle_write_bytes", "bytes", t.shuffleWrite.sum().toDouble)
-    res.layer("exec.spill_bytes", "bytes", t.spill.sum().toDouble)
+    res.layer("driver.jobs", "count", n.toDouble / ops)
+    res.layer("driver.job_gap_ms", "ms", gap / ops)
+    res.layer("driver.codegen_ms", "ms", t.codegenMs / ops)
+    res.layer("exec.task_ms", "ms", t.taskMs.sum().toDouble / ops)
+    res.layer("exec.cpu_ms", "ms", t.cpuMs.sum().toDouble / ops)
+    res.layer("exec.gc_ms", "ms", t.gcMs.sum().toDouble / ops)
+    res.layer("exec.shuffle_write_bytes", "bytes", t.shuffleWrite.sum().toDouble / ops)
+    res.layer("exec.spill_bytes", "bytes", t.spill.sum().toDouble / ops)
   }
 }
