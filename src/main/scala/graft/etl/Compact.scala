@@ -5,9 +5,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Small-files compaction for parquet stores (the operational tail of S5/T9:
-  * a streaming upsert sink or daily partition router emits a file per
-  * micro-batch per partition — after a month the store is thousands of
-  * kilobyte files and every scan pays a task per file).
+  * a daily partition router emits a file per micro-batch per partition, and
+  * a store written by other tools can hold a file per writer task per
+  * partition — after a month that is thousands of kilobyte files and every
+  * scan pays a task per file. `Upsert.mergeBatch` does not accrete: it
+  * rewrites each partition it touches into one file).
   *
   * `compact` rewrites one directory into ~`targetBytes` files: it sizes the
   * output from the ACTUAL input bytes (not a guessed partition count),

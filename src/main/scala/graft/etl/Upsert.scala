@@ -52,6 +52,17 @@ object Upsert {
     * `partitionCol`, and dynamic partition overwrite rewrites only the
     * partitions present in the batch.
     *
+    * Layout: each merge leaves ONE data file per touched partition. The
+    * staged merge is hash-repartitioned on `partitionCol` before the write,
+    * so all rows of a partition value reach one writer task; otherwise
+    * every task of the staged read writes a file into every partition, and
+    * every later scan pays a task per file. A `rebalance`
+    * hint would not do: Spark drops REBALANCE when AQE is off, and Spark
+    * turns AQE off inside each micro-batch of a stateful streaming query,
+    * such as the T1-deduplicated ingest feeding [[foreachBatchMerge]]. The
+    * trade-off at scale is one writer task per touched partition: a batch
+    * that rewrites one huge day writes it from a single task.
+    *
     * Schema drift between the batch and the store is REFUSED loudly by
     * default: the merge rewrites whole partitions, so a silently narrower
     * batch would DELETE store columns from every rewritten partition, and
@@ -167,7 +178,9 @@ object Upsert {
       // matched no rows) writes zero part files, and an unpinned read-back
       // would die on parquet schema inference instead of no-op'ing the
       // dynamic overwrite (review finding)
-      spark.read.schema(merged.schema).parquet(staging).write
+      spark.read.schema(merged.schema).parquet(staging)
+        .repartition(col(partitionCol))
+        .write
         .mode("overwrite")
         .partitionBy(partitionCol)
         .option("partitionOverwriteMode", "dynamic")

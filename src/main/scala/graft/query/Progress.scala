@@ -26,19 +26,19 @@ object Progress {
   /** All-students progress report over an enriched enrollment table.
     *
     * Input columns: F_MASV, F_MAMH, F_TENMHVN, F_TENLOP, F_KHOAHOC, NHHK,
-    * F_DIEM2 (double), F_DVHT, F_TCDTTL.
+    * F_DIEM2 (double), F_DVHT, F_TCDTTL. `spark` is unused: the dimension
+    * lookups are constant maps (`Dims`), not tables.
     */
   def report(spark: SparkSession, enrollment: DataFrame,
              params: Params = Params()): DataFrame = {
     val p = params
 
-    // T18: cohort from student-id prefix, via broadcast dim (app.py:86).
-    val withKhoa = enrollment
-      .withColumn("masv_prefix", substring(col("F_MASV"), 1, 3))
-      .join(Dims.cohort(spark), Seq("masv_prefix"), "inner") // app.py drops unknown prefixes
-
+    // T18: cohort from the student-id prefix (app.py:86); a constant map
+    // lookup, null for an unknown prefix, whose rows app.py drops.
     // T13: query-side coercing casts (app.py:124-125).
-    val typed = withKhoa
+    val typed = enrollment
+      .withColumn("khoa", element_at(typedLit(Dims.cohort), substring(col("F_MASV"), 1, 3)))
+      .filter(col("khoa").isNotNull)
       .withColumn("F_DIEM2", col("F_DIEM2").try_cast("double"))
       .withColumn("F_DVHT", col("F_DVHT").try_cast("double"))
 
@@ -64,44 +64,48 @@ object Progress {
       count(lit(1)).as("n_records") // A4
     )
 
-    val withMajor = perStudent.withColumn("major",
-      when(col("any_di") === 1, "MMT")
-        .when(col("any_fl") === 1, "NNA")
-        .otherwise("Chưa xác định"))
-
-    // T18: (major, cohort) dims — broadcast joins.
-    val withDims = withMajor
-      .join(Dims.creditReq(spark), Seq("major", "khoa"), "left")
-      .join(Dims.duration(spark), Seq("major", "khoa"), "left")
+    val major = when(col("any_di") === 1, "MMT")
+      .when(col("any_fl") === 1, "NNA")
+      .otherwise("Chưa xác định")
+    // T18: (major, cohort) requirements; null for an unknown pair.
+    val totalCredits = element_at(element_at(typedLit(Dims.creditReq), major), col("khoa"))
+    val totalSemesters = element_at(element_at(typedLit(Dims.duration), major), col("khoa"))
 
     // T19: progress arithmetic (app.py:102-121).
-    val arith = withDims
-      .withColumn("start_year", lit(2020) + (col("khoa") - 46))
-      .withColumn("years_elapsed", lit(p.currentYear) - col("start_year"))
-      .withColumn("semesters_elapsed", col("years_elapsed") * 3)
-      .withColumn("remaining_credits", col("total_credits") - col("completed_credits"))
-      .withColumn("remaining_semesters", col("total_semesters") - col("semesters_elapsed"))
-      .withColumn("max_credits_remaining_in_time",
-        col("remaining_semesters") * p.maxCreditsPerSemester)
-      .withColumn("progress_pct", col("completed_credits") / col("total_credits") * 100)
-      // A1: weighted GPA with zero-denominator guard (app.py:137-144).
-      .withColumn("dtbctl",
-        when(col("credits_earned") > 0, col("total_points") / col("credits_earned"))
-          .otherwise(0.0))
+    val startYear = lit(2020) + (col("khoa") - 46)
+    val yearsElapsed = lit(p.currentYear) - startYear
+    val semestersElapsed = yearsElapsed * 3
+    val remainingCredits = totalCredits - col("completed_credits")
+    val remainingSemesters = totalSemesters - semestersElapsed
+    val maxCreditsInTime = remainingSemesters * p.maxCreditsPerSemester
 
-    // T20: tri-state status (app.py:154-178). A student whose requirement
-    // dims are UNKNOWN (major 'Chưa xác định' — no creditReq/duration row)
-    // gets a NULL status, not a verdict: the null remaining_credits made
-    // both when() arms null-false and the otherwise asserted a definite
+    // T20: tri-state status (app.py:154-178). A student whose requirements
+    // are UNKNOWN (major 'Chưa xác định' has no requirement entry) gets a
+    // NULL status, not a verdict: the null remaining_credits made both
+    // when() arms null-false and the otherwise asserted a definite
     // 'Chậm tiến độ' over unknown requirements (review finding). The
     // reference raises KeyError here; a null verdict is the documented
-    // sane deviation (same class as the left-join deviation itself).
-    arith.withColumn("status",
-      when(col("remaining_credits").isNull, lit(null).cast("string"))
-        .when(col("remaining_credits") <= 0, "Hoàn thành")
-        .when(col("remaining_credits") <= col("max_credits_remaining_in_time"), "Đúng tiến độ")
-        .otherwise("Chậm tiến độ"))
-      .drop("any_di", "any_fl")
+    // sane deviation.
+    val status = when(remainingCredits.isNull, lit(null).cast("string"))
+      .when(remainingCredits <= 0, "Hoàn thành")
+      .when(remainingCredits <= maxCreditsInTime, "Đúng tiến độ")
+      .otherwise("Chậm tiến độ")
+
+    perStudent.select(
+      major.as("major"), col("khoa"), col("F_MASV"), col("total_points"),
+      col("credits_earned"), col("completed_credits"), col("n_records"),
+      totalCredits.as("total_credits"), totalSemesters.as("total_semesters"),
+      startYear.as("start_year"),
+      yearsElapsed.as("years_elapsed"),
+      semestersElapsed.as("semesters_elapsed"),
+      remainingCredits.as("remaining_credits"),
+      remainingSemesters.as("remaining_semesters"),
+      maxCreditsInTime.as("max_credits_remaining_in_time"),
+      (col("completed_credits") / totalCredits * 100).as("progress_pct"),
+      // A1: weighted GPA with zero-denominator guard (app.py:137-144).
+      when(col("credits_earned") > 0, col("total_points") / col("credits_earned"))
+        .otherwise(0.0).as("dtbctl"),
+      status.as("status"))
   }
 
   /** Registrar cross-check (SURVEY.md §5, the reference's one implicit

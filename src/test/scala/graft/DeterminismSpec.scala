@@ -46,16 +46,6 @@ class DeterminismSpec extends SparkSpec {
     md.digest().map("%02x".format(_)).mkString
   }
 
-  private def withConfs(confs: (String, String)*)(body: => String): String = {
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   // The streaming replays run fixed micro-batch machinery (file staging +
   // checkpoint dirs) whose cross-batch cuts are pinned by StreamingSpec;
   // re-running each twice here would double multi-second fixtures for no

@@ -176,6 +176,33 @@ class EtlSpec extends SparkSpec {
     assert(m == Map("k1" -> 9.0, "k2" -> 2.0))
   }
 
+  test("S5: mergeBatch leaves one file per touched partition; untouched ones keep theirs") {
+    // 40 keys over 3 days, AQE off so the staged merge keeps its 4 shuffle
+    // partitions: 4 staged files, each with rows of every day. Without the
+    // repartition every partition would get a file per staged file.
+    withConfs("spark.sql.adaptive.enabled" -> "false") {
+      val dir = java.nio.file.Files.createTempDirectory("upsert_layout").toString
+      val days = Seq("2024-01-01", "2024-01-02", "2024-01-03")
+      val b1 = (for (k <- 1 to 40; d <- days)
+        yield (s"k$k", ts(s"$d 10:00:00"), k.toLong, k.toDouble))
+        .toDF("k", "t", "seq", "v").withColumn("day", to_date(col("t")))
+      Upsert.mergeBatch(spark, b1, dir, Seq("k", "day"), "t", "seq", "day")
+      val before = partitionFiles(dir)
+      assert(before.keySet == days.map(d => s"day=$d").toSet, s"$before")
+      assert(before.values.forall(_.size == 1), s"not one file per partition: $before")
+      // a second merge touching only day 2 rewrites day 2 alone
+      val b2 = (1 to 40).map(k => (s"k$k", ts("2024-01-02 12:00:00"), 100L + k, -k.toDouble))
+        .toDF("k", "t", "seq", "v").withColumn("day", to_date(col("t")))
+      Upsert.mergeBatch(spark, b2, dir, Seq("k", "day"), "t", "seq", "day")
+      val after = partitionFiles(dir)
+      assert(after.values.forall(_.size == 1), s"not one file per partition: $after")
+      assert(after("day=2024-01-01") == before("day=2024-01-01") &&
+        after("day=2024-01-03") == before("day=2024-01-03"), "untouched partition rewritten")
+      assert(after("day=2024-01-02") != before("day=2024-01-02"), "touched partition kept")
+      assert(spark.read.parquet(dir).count() == 120)
+    }
+  }
+
   test("S5: mergeBatch refuses schema drift loudly; evolution is opt-in") {
     val dir = java.nio.file.Files.createTempDirectory("upsert_drift").toString
     val b1 = Seq(("k1", ts("2024-01-01 10:00:00"), 1L, 1.0))

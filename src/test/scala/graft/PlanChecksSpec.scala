@@ -51,10 +51,20 @@ class PlanChecksSpec extends SparkSpec {
 
   test("flagship query aggregates with a single student shuffle") {
     val plan = finalPlanString(SparkEntry.queries("flagship_progress")(spark, sf))
-    // one shuffle for the per-student aggregation; dims broadcast
+    // one shuffle for the per-student aggregation; the dims are constant
+    // map lookups, so no join operator of any kind
     val shuffles = countOf(plan, "Exchange hashpartitioning")
     assert(shuffles <= 1, s"too many shuffles ($shuffles):\n$plan")
-    assert(countOf(plan, "BroadcastHashJoin") >= 1)
+    assert(countOf(plan, "Join|CartesianProduct") == 0, s"join in flagship plan:\n$plan")
+  }
+
+  test("one-student report runs no broadcast") {
+    val enrollment = graft.query.EventsAdapter.enrollmentView(
+      graft.model.Tables(spark, sf, "events"))
+    val masv = enrollment.select("F_MASV").as[String].head()
+    val plan = finalPlanString(
+      graft.query.Progress.report(spark, enrollment.filter(col("F_MASV") === masv)))
+    assert(!plan.contains("BroadcastExchange"), s"broadcast in one-student report:\n$plan")
   }
 
   test("near-dup pipeline shingles the corpus exactly once (materialized sketch)") {

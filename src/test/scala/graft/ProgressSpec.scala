@@ -60,6 +60,33 @@ class ProgressSpec extends SparkSpec {
       s"unknown requirements must not yield a verdict: ${r.getAs[String]("status")}")
   }
 
+  test("unknown student-id prefix drops the student (app.py:86)") {
+    // B19 and a too-short id have no cohort; the known B21 student survives.
+    val mixed = Seq(
+      (t0, "B1900001", "C1", "Toán", "DI01", "45", Some(20231), "8.0", 3.0, 30.0),
+      (t0, "B2", "C1", "Toán", "DI01", "46", Some(20231), "8.0", 3.0, 30.0)
+    ).toDF("@timestamp", "F_MASV", "F_MAMH", "F_TENMHVN", "F_TENLOP",
+      "F_KHOAHOC", "NHHK", "F_DIEM2", "F_DVHT", "F_TCDTTL").union(rows)
+    val got = Progress.report(spark, mixed).select("F_MASV").as[String].collect()
+    assert(got.toSeq == Seq("B2100001"), s"got ${got.toSeq}")
+  }
+
+  test("report output schema is pinned: names, order, types") {
+    import org.apache.spark.sql.types._
+    val got = Progress.report(spark, rows).schema.map(f => f.name -> f.dataType)
+    assert(got == Seq(
+      "major" -> StringType, "khoa" -> IntegerType, "F_MASV" -> StringType,
+      "total_points" -> DoubleType, "credits_earned" -> DoubleType,
+      "completed_credits" -> DoubleType, "n_records" -> LongType,
+      "total_credits" -> IntegerType, "total_semesters" -> IntegerType,
+      "start_year" -> IntegerType, "years_elapsed" -> IntegerType,
+      "semesters_elapsed" -> IntegerType, "remaining_credits" -> DoubleType,
+      "remaining_semesters" -> IntegerType,
+      "max_credits_remaining_in_time" -> IntegerType,
+      "progress_pct" -> DoubleType, "dtbctl" -> DoubleType,
+      "status" -> StringType), s"got $got")
+  }
+
   test("credits audit: registrar figure vs computed passed-credit sum, with delta") {
     // Student A: registrar says 9, transcript sums 6 passed (one failed
     // course's 4 credits excluded) -> delta 3 (e.g. transfer credits).

@@ -123,6 +123,38 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("S5 streaming: each micro-batch merge leaves one file per touched partition") {
+    // The stateful dedup in front of the sink (as in the T1 ingest path)
+    // makes Spark run each micro-batch with AQE off: the staged merge keeps
+    // its 4 shuffle partitions and a REBALANCE hint would be dropped. The
+    // merge's explicit repartition must still hold the layout.
+    val dir = java.nio.file.Files.createTempDirectory("stream-layout").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("ckpt-layout").toString
+    val input = MemoryStream[(Timestamp, String, Double)]
+    val q = input.toDF().toDF("t", "k", "v")
+      .dropDuplicates()
+      .withColumn("day", to_date(col("t")))
+      .withColumn("seq", col("v").cast("long"))
+      .writeStream
+      .foreachBatch(Upsert.foreachBatchMerge(dir, Seq("k", "day"), "t", "seq", "day"))
+      .option("checkpointLocation", ckpt)
+      .start()
+    try {
+      val days = Seq("2024-01-01", "2024-01-02", "2024-01-03")
+      input.addData(for (k <- 1 to 40; d <- days) yield (ts(s"$d 10:00:00"), s"k$k", k.toDouble))
+      q.processAllAvailable()
+      val first = partitionFiles(dir)
+      assert(first.size == 3 && first.values.forall(_.size == 1), s"$first")
+      input.addData((1 to 40).map(k => (ts("2024-01-03 11:00:00"), s"k$k", 100.0 + k)))
+      q.processAllAvailable()
+      val second = partitionFiles(dir)
+      assert(second.values.forall(_.size == 1), s"$second")
+      assert(second - "day=2024-01-03" == first - "day=2024-01-03",
+        "untouched partitions rewritten")
+      assert(spark.read.parquet(dir).count() == 120)
+    } finally q.stop()
+  }
+
   test("checkpoint recovery: restart continues from committed offsets, no reprocessing") {
     val dir = java.nio.file.Files.createTempDirectory("recov-data").toString
     val ckpt = java.nio.file.Files.createTempDirectory("recov-ckpt").toString
